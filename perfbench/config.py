@@ -20,9 +20,14 @@ GEN_REPEATS = 3
 SCAN_WARMUP_ITERATIONS = 2
 
 # scan_batch: a heavy-tailed pages table (parquet, many files).
-SCAN_PAGES = 384
-SCAN_FILES = 16
+SCAN_PAGES = 768
+SCAN_FILES = 32
+# The tail's share of pages, its Pareto exponent and its smallest page are
+# assumptions, not measured from a real pages table.  What share of the
+# scan time the tail takes is measured instead: query.scan.tail_time_share.
 SCAN_TAIL_FRACTION = 0.06
+SCAN_TAIL_PARETO_EXP = 0.9
+SCAN_TAIL_MIN_SNIPPETS = 2
 SCAN_MAX_SNIPPETS = 52       # a page holds each snippet at most once
 SCAN_CHECK_SAMPLE = 48
 # the tail of scan_batch's per-document latency (each document's latency is
@@ -35,7 +40,7 @@ BATCH_TAIL_PERCENTILE = 75
 STREAM_RATE_FILES_PER_S = 8.0
 STREAM_PAGES_PER_FILE = 2
 STREAM_FILES_PER_TRIGGER = 64
-STREAM_TAIL_PERCENTILE = 91    # 10 of the 120 files of a 15 s run lie beyond it
+STREAM_TAIL_PERCENTILE = 93    # 11 of the 160 files of a 20 s run lie beyond it
 STREAM_DRAIN_S = 40.0
 STREAM_LATE_FRACTION = 0.1
 STREAM_DUP_FRACTION = 0.1
@@ -60,3 +65,10 @@ EMB_THRESHOLD = 0.5
 
 # Traced run: pages per workload run in-process under the pass wrappers.
 TRACE_SAMPLE = 48
+
+# Traced scan_batch run: pages that repeat snippets (drawn with
+# replacement), timed in-process.  Their cost varies by page far more than
+# the timed mix's: 64-snippet pages took 0.2-3.8 s each, single-threaded, on
+# a 4-core host.
+REPEAT_PAGES = 4
+REPEAT_SNIPPETS = 48

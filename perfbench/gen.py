@@ -92,28 +92,37 @@ class Balanced:
 
 
 def tail_sizes(r: random.Random, n_tail: int) -> list[int]:
-    """Snippet counts of the tail pages: a Pareto size distribution sampled
-    by strata (one draw per 1/n_tail quantile band), so every seed gets a
-    different size mix with the same overall weight.  A page holds each
-    snippet at most once: repeated snippets redefine the same functions,
-    and the flow queries' path count then grows combinatorially with the
-    number of copies, which would let one page dominate a run."""
-    return [min(config.SCAN_MAX_SNIPPETS, int(2 / (1.0 - (j + r.random()) / n_tail) ** 0.9))
+    """Snippet counts of the tail pages: a Pareto size distribution (an
+    assumed shape, see config) sampled by strata (one draw per 1/n_tail
+    quantile band), so every seed gets a different size mix with the same
+    overall weight.  A page holds each snippet at most once: repeated
+    snippets redefine the same functions, and the flow queries' path count
+    then grows combinatorially with the number of copies, which would let
+    one page dominate a run.  `repeat_pages` covers that case."""
+    return [min(config.SCAN_MAX_SNIPPETS,
+                int(config.SCAN_TAIL_MIN_SNIPPETS
+                    / (1.0 - (j + r.random()) / n_tail) ** config.SCAN_TAIL_PARETO_EXP))
             for j in range(n_tail)]
 
 
 def scan_layout(seed: int, n: int) -> list[list[int]]:
     """Snippet indices (into SNIPPET_POOL) of each page: most pages hold one
-    snippet (balanced over the pool), a seeded tail holds many distinct
-    ones."""
+    snippet, a seeded tail holds many distinct ones.  Both draw from the
+    pool in balanced passes, and the tail is stratified: one tail page at a
+    seeded place in each run of n / n_tail pages, with the tail sizes in
+    seeded order.  So every seed's table holds about the same snippets and
+    spreads its tail over the files alike; the seed decides where each
+    snippet and each tail size lands."""
     r = _rng(seed, "scan")
     n_tail = round(n * config.SCAN_TAIL_FRACTION)
     sizes = [1] * n
-    for i, k in zip(r.sample(range(n), n_tail), tail_sizes(r, n_tail)):
-        sizes[i] = k
+    tail = tail_sizes(r, n_tail)
+    r.shuffle(tail)
+    for j, k in enumerate(tail):
+        sizes[r.randrange(j * n // n_tail, (j + 1) * n // n_tail)] = k
     idx = list(range(len(SNIPPET_POOL)))
-    single = Balanced(r, idx)
-    return [single.take() if k == 1 else r.sample(idx, k) for k in sizes]
+    single, multi = Balanced(r, idx), Balanced(r, idx)
+    return [single.take() if k == 1 else multi.take(k) for k in sizes]
 
 
 def scan_pages(seed: int, n: int) -> list[tuple]:
@@ -127,19 +136,42 @@ def scan_pages(seed: int, n: int) -> list[tuple]:
     return rows
 
 
+def repeat_pages(seed: int, n: int, k: int) -> list[tuple]:
+    """Pages of `k` snippets drawn from the pool with replacement, so
+    snippets repeat within a page."""
+    r = _rng(seed, "repeat")
+    return [_page(i, f"https://{r.choice(DOMAINS)}/s{seed}-repeat-{i}", BASE_EPOCH + i * 7,
+                  ";\n".join(r.choice(SNIPPET_POOL) for _ in range(k)))
+            for i in range(n)]
+
+
+# Scripts of the stream's first (warm-up) file, the same for every seed.
+# Pages with findings advance the watermark, so the warm-up always ends with
+# the no-data micro-batch that follows; a seeded first file without findings
+# skipped it and set up about 5 s faster than one with findings.
+WARMUP_SCRIPTS = (WEB_TAINT_SNIPPETS["xss_pos"], WEB_TAINT_SNIPPETS["xss_write_pos"])
+
+
 def stream_pages(seed: int, n_files: int, per_file: int) -> list[list[tuple]]:
-    """Pages for the stream, grouped by file in event-time order.  A
-    seeded share arrives an hour late (inside the two-hour watermark), and
-    a seeded share repeats a page of the previous file, which the stream's
-    dedup must count once."""
+    """Pages for the stream, grouped by file in event-time order.  The
+    first file holds WARMUP_SCRIPTS.  In the later files a seeded share
+    arrives an hour late (inside the two-hour watermark), and a seeded
+    share repeats a page of the previous file, which the stream's dedup
+    must count once."""
     r = _rng(seed, "stream")
     snippets = Balanced(r, SNIPPET_POOL)
     files: list[list[tuple]] = []
     i = 0
     for f in range(n_files):
         rows = []
-        for _ in range(per_file):
-            if files and r.random() < config.STREAM_DUP_FRACTION:
+        for k in range(per_file):
+            if f == 0:
+                rows.append(_page(i, f"https://{r.choice(DOMAINS)}/s{seed}-live-{i}",
+                                  BASE_EPOCH + i * 7,
+                                  WARMUP_SCRIPTS[k % len(WARMUP_SCRIPTS)]))
+                i += 1
+                continue
+            if r.random() < config.STREAM_DUP_FRACTION:
                 rows.append(r.choice(files[-1]))
                 continue
             script = snippets.take()[0]

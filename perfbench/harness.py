@@ -37,7 +37,7 @@ class Context:
         sc = self.spark.sparkContext
         sc.setJobDescription(f"bench:{self.workload}:{self.prefix}{name}")
         try:
-            with self.tracer.span(name) as rec:
+            with self.tracer.span(self.prefix + name) as rec:
                 yield rec
         finally:
             sc.setJobDescription(None)

@@ -129,3 +129,48 @@ def cpg_layers(pages: list[tuple[str, bytes]], kernel: str) -> dict:
         out["cpg.spark_build.rows_s_per_doc"] = tr.self_time("cpg.spark_build.rows") / n
         out["cpg.spark_build.rows_per_doc"] = (nodes + edges) / n
     return out
+
+
+def _scan_s(url: str, html: bytes) -> float:
+    t = time.perf_counter()
+    scan_page_inprocess(url, html)
+    return time.perf_counter() - t
+
+
+def tail_time_share(tail: list[tuple[str, bytes]], singles: list[tuple[str, bytes]],
+                    n_singles: int) -> float:
+    """Share of a table's single-thread scan time (extract → CPG → query
+    bundle) that its tail pages take: every tail page is timed, the
+    `n_singles` one-snippet pages are estimated from the sample `singles`."""
+    if not tail or not singles:
+        return 0.0
+    tail_s = sum(_scan_s(url, html) for url, html in tail)
+    single_s = sum(_scan_s(url, html) for url, html in singles) / len(singles)
+    return tail_s / (tail_s + single_s * n_singles)
+
+
+def repeat_layers(pages: list[tuple[str, bytes]]) -> dict:
+    """Per-doc time of pages that repeat snippets, split into CPG build and
+    query-bundle matching.  Repeated snippets redefine the same functions,
+    and the flow queries' path count grows combinatorially with the copies;
+    scan_batch's timed pages hold each snippet once, so this cost shows only
+    here."""
+    import joern_spark.cpg.build as build
+    from joern_spark.extract import extract_script_text
+    from joern_spark.query.cpgql import Q
+    from joern_spark.query.scan import default_bundle
+
+    bundle = default_bundle()
+    total = match = 0.0
+    for url, html in pages:
+        t0 = time.perf_counter()
+        cpg = build.build_cpg(extract_script_text(bytes(html).decode("utf-8", "replace")), url)
+        t1 = time.perf_counter()
+        q = Q(cpg)
+        for query in bundle:
+            query.matcher(cpg, q)
+        t2 = time.perf_counter()
+        total, match = total + (t2 - t0), match + (t2 - t1)
+    n = max(1, len(pages))
+    return {"query.scan.repeat_s_per_doc": total / n,
+            "query.scan.repeat_match_share": match / total if total else 0.0}

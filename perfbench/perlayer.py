@@ -8,12 +8,10 @@ record.  A layer the workload does not run reports 0.
 
 from __future__ import annotations
 
-import json
-import os
 import statistics
 
-from perfbench import config, eventlog, layers
-from perfbench.harness import median
+from perfbench import config, eventlog, gen, layers
+from perfbench.harness import median, sample_rows
 
 # name → unit, in the order BENCHMARK.json lists them
 PER_LAYER = {
@@ -33,6 +31,9 @@ PER_LAYER = {
     "cpg.inproc_docs_per_s": "docs/s",
     "query.scan.match_s_per_doc": "s",
     "query.scan.findings_per_doc": "count",
+    "query.scan.tail_time_share": "ratio",
+    "query.scan.repeat_s_per_doc": "s",
+    "query.scan.repeat_match_share": "ratio",
     "cpg.spark_build.rows_s_per_doc": "s",
     "cpg.spark_build.rows_per_doc": "count",
     "spark.jobs": "count",
@@ -90,13 +91,14 @@ _SPARK_SUMS = ("jobs", "stages", "tasks", "executor_run_s", "executor_cpu_s", "g
                "python_bytes_sent", "python_bytes_returned")
 
 
-
 def _spans(tr, name: str) -> list[float]:
     return [s["end"] - s["start"] for s in tr.spans if s["name"] == name]
 
 
-def collect(ctx, wl, m: dict, host: dict) -> dict:
-    """Every PER_LAYER metric for this run (0 for layers not exercised)."""
+def collect(ctx, wl, m: dict, untraced: dict, host: dict) -> dict:
+    """Every PER_LAYER metric for this run (0 for layers not exercised).
+    `m` holds the traced run's end-to-end metrics, `untraced` those of the
+    same invocation's untraced baseline."""
     tr = ctx.tracer
     out = {k: 0.0 for k in PER_LAYER}
     out["session.spark_start_s"] = tr.duration("session.spark_start")
@@ -105,7 +107,7 @@ def collect(ctx, wl, m: dict, host: dict) -> dict:
     out["error_share"] = m["error_share"]
     out["mem.peak_rss_mb"] = m["mem.peak_rss_mb"]
 
-    cpg = layers.cpg_layers(wl.sample_pages(ctx), wl.kernel)
+    cpg = layers.cpg_layers(wl.sample_pages(ctx), "scan")
     out.update({k: v for k, v in cpg.items() if k in PER_LAYER})
     out["trace.cpg_wrapper_overhead_share"] = cpg["_wrapper_overhead_share"]
 
@@ -116,6 +118,8 @@ def collect(ctx, wl, m: dict, host: dict) -> dict:
         kernel_docs = wl.committed_pages_all
         arrow_s = sum(eventlog.arrow_stage_run_s(g) for d, g in groups.items()
                       if _batch_id(d) >= wl.first_timed_batch)
+        # traced against untraced latency
+        out["trace.overhead_share"] = m["latency_p50_s"] / untraced["latency_p50_s"] - 1.0
     else:
         iters = range(len(wl.iteration_s))
         per_iter = [eventlog.merge(groups, f"bench:{w}:iter{i}:") for i in iters]
@@ -126,13 +130,19 @@ def collect(ctx, wl, m: dict, host: dict) -> dict:
         out["spark.cached_rdds_delta"] = statistics.mean(wl.cached_delta)
         kernel_docs = wl.docs()
         arrow_s = median(eventlog.arrow_stage_run_s(g) for g in per_iter)
-    if getattr(wl, "probe", None) is not None:
+        # traced against untraced throughput
+        out["trace.overhead_share"] = 1.0 - m["docs_per_s"] / untraced["docs_per_s"]
+        tail, singles = wl.split_pages()
+        out["query.scan.tail_time_share"] = layers.tail_time_share(
+            tail, sample_rows(singles, ctx.seed, config.TRACE_SAMPLE), len(singles))
+        out.update(layers.repeat_layers(
+            [(r[1], r[3]) for r in gen.repeat_pages(ctx.seed, config.REPEAT_PAGES,
+                                                     config.REPEAT_SNIPPETS)]))
         _probe(out, ctx, wl.probe, groups, tr)
     inproc = out["cpg.inproc_docs_per_s"]
     if inproc > 0 and arrow_s > 0:
         out["spark.udf_crossing_share"] = 1.0 - (kernel_docs / inproc) / arrow_s
         out["spark.parallel_efficiency"] = m["docs_per_s"] / (config.NPROC * inproc)
-    out["trace.overhead_share"] = _overhead(ctx, m)
     out["host.steal_pct"] = host.get("vmstat_steal_pct") or 0.0
     out["host.idle_pct"] = host.get("vmstat_idle_pct") or 0.0
     out["host.loadavg_1m"] = host["loadavg"][0]
@@ -141,29 +151,13 @@ def collect(ctx, wl, m: dict, host: dict) -> dict:
     return out
 
 
-def _overhead(ctx, m: dict) -> float:
-    """Traced against untraced: 1 - traced/untraced docs_per_s (scan_batch)
-    or traced/untraced latency_p50_s - 1 (stream_windows), against the
-    untraced run of the same workload and seed in this checkout's output
-    directory; 0 when there is none."""
-    path = os.path.join(config.OUT_DIR, f"{ctx.workload}-s{ctx.seed}-t0.json")
-    try:
-        with open(path) as f:
-            plain = json.load(f)["all_metrics"]
-    except (OSError, ValueError, KeyError):
-        return 0.0
-    if ctx.workload == "stream_windows":
-        return m["latency_p50_s"] / plain["latency_p50_s"] - 1.0
-    return 1.0 - m["docs_per_s"] / plain["docs_per_s"]
-
-
 def _probe(out, ctx, probe, groups, tr):
-    """Graph and corpus layers from the traced run's one step-by-step
-    GraphDedup iteration (job descriptions 'bench:<w>:probe:iter0:*')."""
-    prefix = f"bench:{ctx.workload}:probe:iter0:"
+    """Graph and corpus layers from the traced scan_batch run's layer probe
+    (job descriptions 'bench:<w>:probe:*')."""
+    prefix = f"bench:{ctx.workload}:probe:"
     reach = groups.get(prefix + "reach") or eventlog.merge({}, "")
-    out["dataflow.reachable.s"] = median(_spans(tr, "iter0:reach"))
-    counts = probe.graph.reach_stats[-1]["counts"] if probe.graph.reach_stats else []
+    out["dataflow.reachable.s"] = median(_spans(tr, "probe:reach"))
+    counts = probe["frontier_counts"]
     # counts: the initial frontier, one per round, then the result
     rounds = max(1, len(counts) - 2)
     out["dataflow.reachable.rounds"] = rounds
@@ -172,15 +166,15 @@ def _probe(out, ctx, probe, groups, tr):
     out["dataflow.reachable.new_per_joined_row"] = sum(counts[1:-1]) / joined if joined else 0.0
     summ = median(_spans(tr, "query.crosspage.summaries"))
     out["query.crosspage.summaries_s"] = summ
-    out["query.crosspage.closure_s"] = median(_spans(tr, "iter0:crosspage")) - summ
+    out["query.crosspage.closure_s"] = median(_spans(tr, "probe:crosspage")) - summ
     for key, span in (("pipeline.dedup.minhash_s", "pipeline.dedup.minhash"),
                       ("pipeline.dedup.lsh_pairs_s", "pipeline.dedup.lsh_pairs"),
                       ("pipeline.dedup.clusters_s", "pipeline.dedup.clusters"),
                       ("pipeline.clean.s", "pipeline.clean"),
                       ("pipeline.similarity.pairs_s", "pipeline.similarity.pairs")):
         out[key] = median(_spans(tr, span))
-    out["pipeline.dedup.lsh_precision"] = probe.corpus.precision
-    rows = layers.cpg_layers(probe.sample_pages(ctx), "rows")
+    out["pipeline.dedup.lsh_precision"] = probe["lsh_precision"]
+    rows = layers.cpg_layers(probe["graph_sample"], "rows")
     out["cpg.spark_build.rows_s_per_doc"] = rows["cpg.spark_build.rows_s_per_doc"]
     out["cpg.spark_build.rows_per_doc"] = rows["cpg.spark_build.rows_per_doc"]
 

@@ -56,36 +56,49 @@ def main(argv=None) -> int:
     work = os.path.join(ROOT, config.WORK_DIR, run_id)
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    tracer = Tracer(run_id)
-    ctx = Context(args.workload, args.seed, args.seconds, bool(args.trace), work, tracer)
     host_rec = host.host_state()
-    sampler = host.RssSampler()
-    sampler.start()
     try:
-        record, wl = run_workload(ctx, sampler)
-        record["jvm_exit"] = harness.stop_session(ctx)
-        sampler.stop()
+        baseline = None
+        if args.trace:
+            # the run's own untraced baseline for trace.overhead_share: the
+            # same workload and seed, in a session without the event log
+            base = Context(args.workload, args.seed, args.seconds, False,
+                           os.path.join(work, "baseline"), Tracer(run_id + "-baseline"))
+            try:
+                baseline, _ = run_workload(base)
+            finally:
+                harness.stop_session(base)
+        tracer = Tracer(run_id)
+        ctx = Context(args.workload, args.seed, args.seconds, bool(args.trace), work, tracer)
+        sampler = host.RssSampler()
+        sampler.start()
+        try:
+            record, wl = run_workload(ctx)
+            record["jvm_exit"] = harness.stop_session(ctx)
+        finally:
+            sampler.stop()
+            harness.stop_session(ctx)
         record["all_metrics"]["mem.peak_rss_mb"] = sampler.peak_mib
-        if ctx.trace:
+        if baseline is not None:
             from perfbench import perlayer
-            record["all_metrics"].update(
-                perlayer.collect(ctx, wl, record["all_metrics"], host_rec))
+            record["all_metrics"].update(perlayer.collect(
+                ctx, wl, record["all_metrics"], baseline["all_metrics"], host_rec))
+            record["correct"] = record["correct"] and baseline["correct"]
+            record["baseline"] = baseline
     finally:
-        sampler.stop()
-        harness.stop_session(ctx)
         shutil.rmtree(work, ignore_errors=True)
     record["host"] = host_rec
     record["spans"] = tracer.spans
     return emit(args, record)
 
 
-def run_workload(ctx, sampler) -> dict:
+def run_workload(ctx) -> tuple[dict, object]:
     from perfbench import config, harness, host
-    from perfbench.batch import WORKLOADS
-    from perfbench.harness import median
+    from perfbench.batch import ScanBatch
+    from perfbench.harness import median, percentile
     from perfbench.stream import StreamWindows
 
-    wl = StreamWindows() if ctx.workload == "stream_windows" else WORKLOADS[ctx.workload]()
+    wl = StreamWindows() if ctx.workload == "stream_windows" else ScanBatch()
     tr = ctx.tracer
     t_setup = time.perf_counter()
     with tr.span("session.spark_start"):
@@ -116,19 +129,20 @@ def run_workload(ctx, sampler) -> dict:
             res = wl.measure(ctx)
         lat = res["latencies"]
         m["docs_per_s"] = res["committed_pages"] / res["wall_s"]
-        m["latency_p50_s"] = harness.percentile(lat, 50)
-        m["latency_tail_s"] = harness.percentile(lat, config.STREAM_TAIL_PERCENTILE)
+        m["latency_p50_s"] = percentile(lat, 50)
+        m["latency_tail_s"] = percentile(lat, config.STREAM_TAIL_PERCENTILE)
         attempted = wl.docs()
         iter_times = []
         n_iter = 1
     else:
         with tr.span("timed"):
-            iter_times = harness.timed_loop(ctx.seconds, wl.iteration_step(ctx))
+            iter_times = harness.timed_loop(ctx.seconds, lambda i: wl.iteration(ctx, i))
         n_iter = len(iter_times)
         m["docs_per_s"] = wl.docs() / median(iter_times)
-        # every document of an iteration gets its result when the iteration ends
+        # every document of an iteration gets its result when the iteration
+        # ends, so the per-document percentiles are those of the iterations
         m["latency_p50_s"] = median(iter_times)
-        m["latency_tail_s"] = tail_of_iterations(iter_times, wl.docs())
+        m["latency_tail_s"] = percentile(iter_times, config.BATCH_TAIL_PERCENTILE)
         attempted = wl.docs() * n_iter
     # what the run still holds once the JVM has collected its garbage:
     # unlike the peak, this does not depend on when the collector ran
@@ -152,16 +166,6 @@ def run_workload(ctx, sampler) -> dict:
               "stream_batches": getattr(wl, "batches", None)}
     wl.iteration_s = iter_times
     return record, wl
-
-
-def tail_of_iterations(times: list[float], docs_per_iter: int) -> float:
-    """The tail percentile of per-document latency, where each document's
-    latency is the time of the iteration that produced its result."""
-    from perfbench import config
-    from perfbench.harness import percentile
-
-    samples = [t for t in times for _ in range(docs_per_iter)]
-    return percentile(samples, config.BATCH_TAIL_PERCENTILE)
 
 
 def emit(args, record: dict) -> int:

@@ -92,7 +92,6 @@ def file_times(cp: str, log: str = "commits") -> dict[str, float]:
 
 class StreamWindows:
     name = "stream_windows"
-    kernel = "scan"
 
     def generate(self, ctx, out):
         n_timed = int(math.ceil(config.STREAM_RATE_FILES_PER_S * ctx.seconds))
@@ -120,27 +119,24 @@ class StreamWindows:
         self.cp = ctx.path("stream", "cp")
         os.makedirs(self.src, exist_ok=True)
         self.sink_s: list[float] = []
+        orig = job.exactly_once_batch_writer
+        sink_s = self.sink_s
+
+        def timed_writer(*a, **kw):
+            write = orig(*a, **kw)
+
+            def timed(df, batch_id):
+                t = time.perf_counter()
+                write(df, batch_id)
+                sink_s.append(time.perf_counter() - t)
+            return timed
         if ctx.trace:
-            orig = job.exactly_once_batch_writer
-            sink_s = self.sink_s
-
-            def timed_writer(*a, **kw):
-                write = orig(*a, **kw)
-
-                def timed(df, batch_id):
-                    t = time.perf_counter()
-                    write(df, batch_id)
-                    sink_s.append(time.perf_counter() - t)
-                return timed
             job.exactly_once_batch_writer = timed_writer
-            try:
-                self.query = job.run_stream(ctx.spark, self.src, self.out, self.cp,
-                                            files_per_trigger=config.STREAM_FILES_PER_TRIGGER)
-            finally:
-                job.exactly_once_batch_writer = orig
-        else:
+        try:
             self.query = job.run_stream(ctx.spark, self.src, self.out, self.cp,
                                         files_per_trigger=config.STREAM_FILES_PER_TRIGGER)
+        finally:
+            job.exactly_once_batch_writer = orig
 
     def _wait_committed(self, names: set[str], deadline: float) -> dict[str, float]:
         while True:

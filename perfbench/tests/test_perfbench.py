@@ -60,6 +60,7 @@ def test_different_seed_changes_the_snippet_mix():
     assert [r[4] for r in gen.chain_pages(1, 40)] != [r[4] for r in gen.chain_pages(2, 40)]
     assert [f[0][4] for f in gen.stream_pages(1, 10, 2)] != \
         [f[0][4] for f in gen.stream_pages(2, 10, 2)]
+    assert [r[4] for r in gen.repeat_pages(1, 4, 48)] != [r[4] for r in gen.repeat_pages(2, 4, 48)]
 
 
 def test_scan_pages_are_heavy_tailed_with_distinct_snippets():
@@ -72,6 +73,15 @@ def test_scan_pages_are_heavy_tailed_with_distinct_snippets():
     singles = [p[0] for p in layout if len(p) == 1]
     counts = [singles.count(j) for j in range(len(gen.SNIPPET_POOL))]
     assert max(counts) - min(counts) <= 1
+
+
+def test_repeat_pages_repeat_snippets():
+    pages = gen.repeat_pages(3, 4, 48)
+    assert pages == gen.repeat_pages(3, 4, 48)
+    for r in pages:
+        script = r[4]
+        found = [s for s in gen.SNIPPET_POOL if s in script]
+        assert any(script.count(s) > 1 for s in found)
 
 
 # --- event log -------------------------------------------------------------
