@@ -13,9 +13,7 @@ from __future__ import annotations
 
 import argparse
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 
@@ -23,6 +21,7 @@ def flows_job(pages, source_regex: str, sink_regex: str,
               source_kind: str = "call", sink_kind: str = "call",
               semantics_file: str | None = None):
     from joern_spark.cpg.build import build_cpg
+    from joern_spark.cpg.docmap import map_documents
     from joern_spark.cpg.semloader import semantics_from_file
     from joern_spark.dataflow.engine import reachable_by_flows, result_pairs
     from joern_spark.extract import extract_script_text
@@ -42,27 +41,17 @@ def flows_job(pages, source_regex: str, sink_regex: str,
                 "literal": q.literal()}[kind]
         return base.code(regex).l()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    cpg = build_cpg(
-                        extract_script_text(bytes(html).decode("utf-8", "replace")), url)
-                    q = Q(cpg)
-                    sources = select(q, source_kind, source_regex)
-                    sinks = select(q, sink_kind, sink_regex)
-                    if not sources or not sinks:
-                        continue
-                    for f in reachable_by_flows(cpg, sinks, sources,
-                                                semantics=semantics):
-                        rows.append((url, [f"{c} @ {ln}" for c, ln in
-                                           result_pairs(cpg, f)]))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["url", "flow"])
+    def page(url, html):
+        cpg = build_cpg(extract_script_text(html), url)
+        q = Q(cpg)
+        sources = select(q, source_kind, source_regex)
+        sinks = select(q, sink_kind, sink_regex)
+        if not sources or not sinks:
+            return []
+        return [(url, [f"{c} @ {ln}" for c, ln in result_pairs(cpg, f)])
+                for f in reachable_by_flows(cpg, sinks, sources, semantics=semantics)]
 
-    return pages.select("url", "html").mapInPandas(run, schema)
+    return map_documents(pages, page, schema)
 
 
 def main():

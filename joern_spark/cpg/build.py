@@ -3,8 +3,9 @@ call graph → CFG → reaching-def/DDG.
 
 Mirrors X2Cpg.defaultOverlayCreators() order (X2Cpg.scala:374-385:
 Base, ControlFlow, TypeRelations, CallGraph) + OssDataFlow
-(OssDataFlow.scala:8-26), collapsed into one function that the Spark
-`applyInPandas` build UDF calls once per document.
+(OssDataFlow.scala:8-26), collapsed into one function that every
+per-document Spark kernel (one `mapInPandas` through
+`cpg.docmap.map_documents`) calls once per page.
 """
 
 from __future__ import annotations
@@ -27,17 +28,10 @@ from joern_spark.cpg.semantics import Semantics, default_semantics
 _SEMANTICS = default_semantics()
 
 
-def build_cpg(src: str, filename: str = "script.js",
-              semantics: Semantics | None = None,
-              post_process: bool = True) -> Cpg:
-    """post_process=True mirrors joern-cli production (frontend overlays +
-    jssrc post-processing).  post_process=False is the JsSrc2CpgSuite /
-    JsSrcCfgTestCpg fixture (frontend only) — the reference's AST/CFG
-    goldens are written against that, e.g. closure names before
-    ConstClosurePass renames them."""
-    if sys.getrecursionlimit() < 20000:
-        sys.setrecursionlimit(20000)
-    cpg = lower_js(src, filename)
+def _overlay(cpg: Cpg, semantics: Semantics | None, post_process: bool) -> Cpg:
+    """The overlay pass order over a lowered graph, shared by build_cpg
+    and build_cpg_files.  Each pass is looked up as a module global when
+    it runs, so wrapping one (tracing, profiling) reaches both builds."""
     create_namespaces(cpg)   # NamespaceCreator (A5, Base overlay)
     create_type_decl_stubs(cpg)  # TypeDeclStubCreator (Base overlay)
     create_method_stubs(cpg)
@@ -60,6 +54,19 @@ def build_cpg(src: str, filename: str = "script.js",
     return cpg
 
 
+def build_cpg(src: str, filename: str = "script.js",
+              semantics: Semantics | None = None,
+              post_process: bool = True) -> Cpg:
+    """post_process=True mirrors joern-cli production (frontend overlays +
+    jssrc post-processing).  post_process=False is the JsSrc2CpgSuite /
+    JsSrcCfgTestCpg fixture (frontend only) — the reference's AST/CFG
+    goldens are written against that, e.g. closure names before
+    ConstClosurePass renames them."""
+    if sys.getrecursionlimit() < 20000:
+        sys.setrecursionlimit(20000)
+    return _overlay(lower_js(src, filename), semantics, post_process)
+
+
 def build_cpg_frontend(src: str, filename: str = "script.js",
                        semantics: Semantics | None = None) -> Cpg:
     """Frontend-only fixture (JsSrc2CpgSuite / JsSrcCfgTestCpg): no
@@ -78,24 +85,7 @@ def build_cpg_files(files: list[tuple[str, str]],
 
     if sys.getrecursionlimit() < 20000:
         sys.setrecursionlimit(20000)
-    cpg = lower_js_files(files)
-    create_namespaces(cpg)
-    create_type_decl_stubs(cpg)
-    create_method_stubs(cpg)
-    if post_process:
-        run_type_recovery(cpg)
-        hint_this_identifiers(cpg)
-        register_types(cpg)
-        create_type_decl_stubs(cpg)
-        link_aliases(cpg)
-        link_field_accesses(cpg)
-    link_dynamic_calls(cpg)
-    link_calls(cpg)
-    add_cfg(cpg)
-    ipdoms = add_dominators(cpg)
-    add_cdg(cpg, ipdoms)
-    add_reaching_defs(cpg, semantics or _SEMANTICS)
-    return cpg
+    return _overlay(lower_js_files(files), semantics, post_process)
 
 
 def build_project(input_path: str,

@@ -6,8 +6,9 @@ Cfg.scala:34-197): a sub-tree's CFG is a (entryNode, edges, fringe)
 triple; appending connects the fringe to the next entry.  Edge kinds:
 AlwaysEdge/TrueEdge/FalseEdge/CaseEdge.
 
-Runs per (document, method) inside the Spark `applyInPandas` UDF — the
-recursion is sequential per method, parallel across documents.
+Runs per (document, method) inside the per-document `mapInPandas` kernel
+(`cpg.docmap.map_documents`) — the recursion is sequential per method,
+parallel across documents.
 """
 
 from __future__ import annotations

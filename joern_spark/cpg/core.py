@@ -3,7 +3,8 @@
 Mirrors the reference's node/edge semantics (x2cpg Ast.scala — child order
 assignment, ARGUMENT/RECEIVER/CONDITION/... typed edges) on plain Python
 objects.  One `Cpg` per document; documents are independent, which is what
-makes `groupBy(url).applyInPandas` the unit of Spark parallelism.
+makes the page the unit of Spark parallelism (one narrow `mapInPandas`
+through `cpg.docmap.map_documents`, no grouping shuffle).
 
 Node ids are per-document sequence numbers; globally-stable ids are derived
 at DataFrame-conversion time as hash64(url, label, start, end, seq) —

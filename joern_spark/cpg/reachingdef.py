@@ -13,8 +13,9 @@ Behavioral port of the reference's pass chain:
 - bail-out at >4000 definitions (ReachingDefPass.scala:40-52)
 
 Spark mapping: this whole module runs per (url, method) inside the
-`applyInPandas` build UDF — the worklist is sequential per method and
-embarrassingly parallel across methods/documents.
+per-document `mapInPandas` kernel (`cpg.docmap.map_documents`) — the
+worklist is sequential per method and embarrassingly parallel across
+methods/documents.
 """
 
 from __future__ import annotations

@@ -15,7 +15,9 @@ Scale notes (100 TB):
 - maxRecordsPerBatch bounds Arrow batch memory for large pages.
 - skew: hot domains are fine here (unit of work = row, not domain); the
   groupBy-shaped variants downstream salt on url-hash.
-- parse errors degrade per-document into an error row (never kill a batch).
+- a document whose build raises is skipped (it never kills a batch) and
+  leaves no row behind; `map_documents` is the one place an error-row
+  contract would go.
 
 Schema scope: NODES_SCHEMA is the QUERYABLE SUBSET of the per-document
 node model — the 16 properties the corpus queries (frames.py), the
@@ -30,15 +32,14 @@ when a corpus-level consumer appears, together with its fixture refresh.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
 from joern_spark.cpg.build import build_cpg
+from joern_spark.cpg.docmap import decode_html, map_documents
 from joern_spark.extract import extract_script_text
 
 NODES_SCHEMA = StructType([
@@ -68,11 +69,6 @@ EDGES_SCHEMA = StructType([
     StructField("variable", StringType()),
 ])
 
-ERRORS_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("error", StringType()),
-])
-
 # Union schema for the single-pass build: node fields + edge fields + a
 # `kind` discriminator ('n' | 'e').  `label` is shared (node label / edge
 # label); edge-only fields are null on node rows and vice versa.
@@ -96,9 +92,9 @@ def stable_node_id(url: str, node) -> int:
                           "big", signed=True)
 
 
-def cpg_rows_for_document(url: str, html: bytes):
+def cpg_rows_for_document(url: str, html: bytes | str):
     """One document → (node_rows, edge_rows). Raises on parse failure."""
-    text = extract_script_text(bytes(html).decode("utf-8", errors="replace"))
+    text = extract_script_text(decode_html(html))
     cpg = build_cpg(text, url)
     ids = {n.id: stable_node_id(url, n) for n in cpg.nodes}
     node_rows = [
@@ -136,39 +132,18 @@ def build_cpg_rows(pages: DataFrame, on_build=None) -> DataFrame:
     build-once invariant.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in COMBINED_SCHEMA.fields]
-        # int64 ids must NOT pass through float64 (null padding on the other
-        # row kind would coerce and round the low bits) — build as object,
-        # then cast the long/int columns to pandas nullable ints (exact).
-        long_cols = ("node_id", "src", "dst")
-        int_cols = ("order", "argument_index", "line", "column", "index")
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    node_rows, edge_rows = cpg_rows_for_document(url, html)
-                except Exception:
-                    continue
-                if on_build is not None:
-                    on_build(url)
-                rows.extend(("n",) + nr + _N_PAD for nr in node_rows)
-                # edge row er = (url, src, dst, label, variable); label goes
-                # in the shared label slot, node_id stays null.
-                rows.extend(
-                    ("e", er[0], None, er[3]) + _E_PAD + (er[1], er[2], er[4])
-                    for er in edge_rows
-                )
-            out = pd.DataFrame(rows, columns=cols, dtype=object)
-            if len(out):
-                for c in long_cols:
-                    out[c] = out[c].astype("Int64")
-                for c in int_cols:
-                    out[c] = out[c].astype("Int32")
-                out["is_external"] = out["is_external"].astype("boolean")
-            yield out
+    def page(url, html):
+        node_rows, edge_rows = cpg_rows_for_document(url, html)
+        if on_build is not None:
+            on_build(url)
+        rows = [("n",) + nr + _N_PAD for nr in node_rows]
+        # edge row er = (url, src, dst, label, variable); label goes in the
+        # shared label slot, node_id stays null.
+        rows.extend(("e", er[0], None, er[3]) + _E_PAD + (er[1], er[2], er[4])
+                    for er in edge_rows)
+        return rows
 
-    return pages.select("url", "html").mapInPandas(run, COMBINED_SCHEMA)
+    return map_documents(pages, page, COMBINED_SCHEMA)
 
 
 def split_cpg_tables(combined: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -72,14 +72,11 @@ def data_flow_slices(pages, call_code_regex: str = ".*",
                      slice_depth: int = DEFAULT_SLICE_DEPTH):
     """Spark job: pages → slice rows (url, call_code, n_nodes, n_edges,
     node_codes)."""
-    import re
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (ArrayType, IntegerType, StringType,
                                    StructField, StructType)
 
     from joern_spark.cpg.build import build_cpg
+    from joern_spark.cpg.docmap import map_documents
     from joern_spark.extract import extract_script_text
 
     schema = StructType([
@@ -91,25 +88,18 @@ def data_flow_slices(pages, call_code_regex: str = ".*",
     ])
     rx = re.compile(call_code_regex, re.DOTALL)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    cpg = build_cpg(extract_script_text(bytes(html).decode("utf-8", "replace")), url)
-                except Exception:
-                    continue
-                calls = [n for n in cpg.nodes if n.label == "CALL"
-                         and not n.name.startswith("<operator>")
-                         and rx.fullmatch(n.code or "")]
-                for c in calls:
-                    nodes, edges = slice_for_call(cpg, c, slice_depth)
-                    rows.append((url, c.code, len(nodes), len(edges),
-                                 sorted({n.code for n in nodes})))
-            yield pd.DataFrame(rows, columns=cols)
+    def page(url, html):
+        cpg = build_cpg(extract_script_text(html), url)
+        rows = []
+        for c in cpg.nodes:
+            if (c.label == "CALL" and not c.name.startswith("<operator>")
+                    and rx.fullmatch(c.code or "")):
+                nodes, edges = slice_for_call(cpg, c, slice_depth)
+                rows.append((url, c.code, len(nodes), len(edges),
+                             sorted({n.code for n in nodes})))
+        return rows
 
-    return pages.select("url", "html").mapInPandas(run, schema)
+    return map_documents(pages, page, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -389,12 +379,11 @@ def usage_slices(pages, min_num_calls: int = 1,
     """Corpus-level usage slicing: pages → (url, slice_json) rows, one
     ProgramUsageSlice JSON document per page, in a single Arrow pass."""
     import json
-    from collections.abc import Iterator
 
-    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
     from joern_spark.cpg.build import build_cpg
+    from joern_spark.cpg.docmap import map_documents
     from joern_spark.extract import extract_script_text
 
     schema = StructType([
@@ -402,17 +391,9 @@ def usage_slices(pages, min_num_calls: int = 1,
         StructField("slice_json", StringType()),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    cpg = build_cpg(
-                        extract_script_text(bytes(html).decode("utf-8", "replace")), url)
-                    s = usage_slice(cpg, min_num_calls, exclude_operator_calls)
-                    rows.append((url, json.dumps(s, sort_keys=True)))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["url", "slice_json"])
+    def page(url, html):
+        cpg = build_cpg(extract_script_text(html), url)
+        s = usage_slice(cpg, min_num_calls, exclude_operator_calls)
+        return [(url, json.dumps(s, sort_keys=True))]
 
-    return pages.select("url", "html").mapInPandas(run, schema)
+    return map_documents(pages, page, schema)

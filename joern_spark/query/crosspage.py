@@ -28,10 +28,8 @@ the cross-page composition is this engine's site-level extension
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from urllib.parse import urlparse
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -39,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from joern_spark.cpg.build import build_cpg
+from joern_spark.cpg.docmap import map_documents
 from joern_spark.dataflow.engine import reachable_by_flows
 from joern_spark.extract import extract_script_text
 from joern_spark.query.cpgql import Q
@@ -190,22 +189,12 @@ def page_flow_summaries(pages: DataFrame) -> DataFrame:
     (`summary_error_counts`).  Every flow query filters on kind and/or
     tainted, so error rows never enter a result."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SUMMARY_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    h = (bytes(html).decode("utf-8", "replace")
-                         if not isinstance(html, str) else html)
-                    rows.extend(summarize_page(url, h))
-                except Exception as e:
-                    rows.append((_safe_domain(url), url, "error",
-                                 f"summarize_failed:{type(e).__name__}",
-                                 False))
-            yield pd.DataFrame(rows, columns=cols)
+    def failed(values, exc):
+        url = values[0]
+        return [(_safe_domain(url), url, "error",
+                 f"summarize_failed:{type(exc).__name__}", False)]
 
-    return pages.select("url", "html").mapInPandas(run, SUMMARY_SCHEMA)
+    return map_documents(pages, summarize_page, SUMMARY_SCHEMA, on_error=failed)
 
 
 def page_flow_summaries_ext(pages: DataFrame) -> DataFrame:
@@ -220,27 +209,20 @@ def page_flow_summaries_ext(pages: DataFrame) -> DataFrame:
     - func_name='wrap_capped', callee_name=str(n_skipped) — the page hit
       MAX_WRAP_PAIRS and skipped n wrap-edge dataflow tests."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SUMMARY_EXT_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    h = (bytes(html).decode("utf-8", "replace")
-                         if not isinstance(html, str) else html)
-                    st: dict = {}
-                    rows.extend(summarize_page_ext(url, h, _stats=st))
-                    if st.get("wrap_skipped"):
-                        rows.append((_safe_domain(url), url, "error",
-                                     "wrap_capped",
-                                     str(st["wrap_skipped"]), False))
-                except Exception as e:
-                    rows.append((_safe_domain(url), url, "error",
-                                 f"summarize_failed:{type(e).__name__}",
-                                 None, False))
-            yield pd.DataFrame(rows, columns=cols)
+    def page(url, html):
+        st: dict = {}
+        rows = summarize_page_ext(url, html, _stats=st)
+        if st.get("wrap_skipped"):
+            rows.append((_safe_domain(url), url, "error", "wrap_capped",
+                         str(st["wrap_skipped"]), False))
+        return rows
 
-    return pages.select("url", "html").mapInPandas(run, SUMMARY_EXT_SCHEMA)
+    def failed(values, exc):
+        url = values[0]
+        return [(_safe_domain(url), url, "error",
+                 f"summarize_failed:{type(exc).__name__}", None, False)]
+
+    return map_documents(pages, page, SUMMARY_EXT_SCHEMA, on_error=failed)
 
 
 def summary_error_counts(summaries: DataFrame) -> DataFrame:

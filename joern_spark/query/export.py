@@ -157,41 +157,27 @@ def method_dot_frames(pages, representation: str = "cfg"):
     reference's DotSerializer format (query/dot.py) inside a single
     mapInPandas pass — methods render independently, so this scales as
     the build does."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
+
+    from joern_spark.cpg.build import build_cpg
+    from joern_spark.cpg.docmap import map_documents
+    from joern_spark.extract import extract_script_text
+    from joern_spark.query import dot as dotmod
 
     schema = StructType([
         StructField("url", StringType()),
         StructField("method_full_name", StringType()),
         StructField("dot", StringType()),
     ])
+    render = {
+        "ast": dotmod.dot_ast, "cfg": dotmod.dot_cfg,
+        "cdg": dotmod.dot_cdg, "ddg": dotmod.dot_ddg,
+        "pdg": dotmod.dot_pdg, "cpg14": dotmod.dot_cpg14,
+    }[representation]
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        from joern_spark.cpg.build import build_cpg
-        from joern_spark.extract import extract_script_text
-        from joern_spark.query import dot as dotmod
+    def page(url, html):
+        cpg = build_cpg(extract_script_text(html), url)
+        return [(url, m.full_name, render(cpg, m)) for m in cpg.methods()
+                if not (m.is_external or m.name.startswith("<operator>"))]
 
-        renderers = {
-            "ast": dotmod.dot_ast, "cfg": dotmod.dot_cfg,
-            "cdg": dotmod.dot_cdg, "ddg": dotmod.dot_ddg,
-            "pdg": dotmod.dot_pdg, "cpg14": dotmod.dot_cpg14,
-        }
-        render = renderers[representation]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    cpg = build_cpg(extract_script_text(
-                        bytes(html).decode("utf-8", "replace")), url)
-                except Exception:
-                    continue
-                for m in cpg.methods():
-                    if m.is_external or m.name.startswith("<operator>"):
-                        continue
-                    rows.append((url, m.full_name, render(cpg, m)))
-            yield pd.DataFrame(rows,
-                               columns=["url", "method_full_name", "dot"])
-
-    return pages.select("url", "html").mapInPandas(run, schema)
+    return map_documents(pages, page, schema)

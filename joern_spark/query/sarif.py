@@ -183,35 +183,25 @@ def scan_evidence_sarif(pages, bundle=None) -> dict:
     pass; the driver only merges the (report-sized) per-document result
     lists — same collect contract as findings_report."""
     import json
-    from collections.abc import Iterator
 
-    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
+
+    from joern_spark.cpg.build import build_cpg
+    from joern_spark.cpg.docmap import map_documents
+    from joern_spark.extract import extract_script_text
 
     schema = StructType([StructField("doc", StringType())])
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        from joern_spark.cpg.build import build_cpg
-        from joern_spark.extract import extract_script_text
-
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    text = extract_script_text(
-                        bytes(html).decode("utf-8", "replace"))
-                    cpg = build_cpg(text, url)
-                    findings = document_findings(cpg, bundle)
-                except Exception:
-                    continue
-                if findings:
-                    rows.append((json.dumps(
-                        findings_to_sarif(cpg, findings)["runs"][0]),))
-            yield pd.DataFrame(rows, columns=["doc"])
+    def page(url, html):
+        cpg = build_cpg(extract_script_text(html), url)
+        findings = document_findings(cpg, bundle)
+        if not findings:
+            return []
+        return [(json.dumps(findings_to_sarif(cpg, findings)["runs"][0]),)]
 
     merged_rules: dict[str, dict] = {}
     results: list[dict] = []
-    for row in pages.select("url", "html").mapInPandas(run, schema).collect():
+    for row in map_documents(pages, page, schema).collect():
         run_doc = json.loads(row.doc)
         for rule in run_doc["tool"]["driver"]["rules"]:
             merged_rules.setdefault(rule["id"], rule)

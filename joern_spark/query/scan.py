@@ -11,7 +11,7 @@ suite's counts on the same corpus slice (BASELINE.json north_star).
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -21,6 +21,7 @@ from pyspark.sql.types import (
 
 from joern_spark.cpg.build import build_cpg
 from joern_spark.cpg.core import Cpg
+from joern_spark.cpg.docmap import decode_html, map_documents
 from joern_spark.dataflow.engine import reachable_by_flows
 from joern_spark.extract import extract_script_text
 from joern_spark.query.cpgql import Q
@@ -270,29 +271,38 @@ FINDINGS_SCHEMA = StructType([
 ])
 
 
+def scan_page(url: str, html: str,
+              queries: list[Query]) -> tuple[Cpg, list[tuple[Query, int]]]:
+    """One page through the bundle: its CPG and every (query, n_matches)
+    with n_matches > 0.  Raises when the page fails to build or match."""
+    cpg = build_cpg(extract_script_text(html), url)
+    q = Q(cpg)
+    hits = []
+    for query in queries:
+        n = int(query.matcher(cpg, q))
+        if n > 0:
+            hits.append((query, n))
+    return cpg, hits
+
+
+def _finding_rows(url, warc_ts, html: str, queries: list[Query]) -> list[tuple]:
+    _cpg, hits = scan_page(url, html, queries)
+    return [(url, warc_ts, query.name, n, query.score) for query, n in hits]
+
+
+def _parse_error_rows(values: tuple, _exc: Exception) -> list[tuple]:
+    url, warc_ts = values[:2]
+    return [(url, warc_ts, "<parse-error>", 1, 0.0)]
+
+
 def scan_findings(pages: DataFrame, bundle: list[Query] | None = None) -> DataFrame:
     """pages(url, warc_ts, html) → findings, one row per (url, query) with
-    n_matches > 0.  One narrow Arrow pass; no shuffle."""
+    n_matches > 0, or one `<parse-error>` row for a page that fails.  One
+    narrow Arrow pass; no shuffle."""
     queries = bundle if bundle is not None else default_bundle()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FINDINGS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                try:
-                    text = extract_script_text(bytes(html).decode("utf-8", "replace"))
-                    cpg = build_cpg(text, url)
-                    q = Q(cpg)
-                    for query in queries:
-                        n = int(query.matcher(cpg, q))
-                        if n > 0:
-                            rows.append((url, ts, query.name, n, query.score))
-                except Exception:
-                    rows.append((url, ts, "<parse-error>", 1, 0.0))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(run, FINDINGS_SCHEMA)
+    return map_documents(
+        pages, lambda url, warc_ts, html: _finding_rows(url, warc_ts, html, queries),
+        FINDINGS_SCHEMA, cols=("url", "warc_ts", "html"), on_error=_parse_error_rows)
 
 
 def scan_generated_pages(spark, n_docs: int, n_partitions: int | None = None,
@@ -305,35 +315,21 @@ def scan_generated_pages(spark, n_docs: int, n_partitions: int | None = None,
     instead of two chained Python stages (generator UDF → JVM → scan UDF),
     which pays an extra Arrow round-trip a real parquet/Iceberg-backed pages
     table would never have.  This is the north-star throughput path."""
-    import pandas as pd
-
     from joern_spark.sources.corpus import page_for
 
     queries = bundle if bundle is not None else default_bundle()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FINDINGS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                url, ts, html, _text = page_for(int(i), seed, late_fraction)
-                warc_ts = pd.Timestamp(ts, unit="s")
-                try:
-                    text = extract_script_text(
-                        html.decode("utf-8", "replace")
-                        if isinstance(html, (bytes, bytearray)) else str(html))
-                    cpg = build_cpg(text, url)
-                    q = Q(cpg)
-                    for query in queries:
-                        n = int(query.matcher(cpg, q))
-                        if n > 0:
-                            rows.append((url, warc_ts, query.name, n, query.score))
-                except Exception:
-                    rows.append((url, warc_ts, "<parse-error>", 1, 0.0))
-            yield pd.DataFrame(rows, columns=cols)
+    def page(i):
+        url, ts, html, _text = page_for(int(i), seed, late_fraction)
+        warc_ts = pd.Timestamp(ts, unit="s")
+        try:
+            return _finding_rows(url, warc_ts, decode_html(html), queries)
+        except Exception as exc:
+            return _parse_error_rows((url, warc_ts), exc)
 
     par = n_partitions or spark.sparkContext.defaultParallelism
-    return spark.range(n_docs, numPartitions=par).mapInPandas(run, FINDINGS_SCHEMA)
+    return map_documents(spark.range(n_docs, numPartitions=par), page,
+                         FINDINGS_SCHEMA, cols=("id",))
 
 
 def findings_report(findings: DataFrame) -> DataFrame:

@@ -140,10 +140,7 @@ def make_assemble_update(ttl_ms: int | None):
 
     def _assemble_update(key: Any, pdfs: Iterator[pd.DataFrame],
                          state: GroupState) -> Iterator[pd.DataFrame]:
-        from joern_spark.cpg.build import build_cpg
-        from joern_spark.extract import extract_script_text
-        from joern_spark.query.cpgql import Q
-        from joern_spark.query.scan import default_bundle
+        from joern_spark.query.scan import default_bundle, scan_page
 
         (url,) = key
         if state.hasTimedOut:
@@ -163,11 +160,8 @@ def make_assemble_update(ttl_ms: int | None):
         if n_parts and len(parts) >= n_parts:
             html = "".join(parts[i] for i in sorted(parts))
             try:
-                cpg = build_cpg(extract_script_text(html), url)
-                q = Q(cpg)
-                n_findings = sum(
-                    1 for query in default_bundle() if int(query.matcher(cpg, q)) > 0)
-                n_nodes = len(cpg.nodes)
+                cpg, hits = scan_page(url, html, default_bundle())
+                n_nodes, n_findings = len(cpg.nodes), len(hits)
             except Exception:
                 n_nodes, n_findings = -1, -1
             state.remove()
